@@ -1,5 +1,6 @@
 package graft.kmeans
 
+import graft.functions.{CentroidKernels, CentroidSet}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -7,30 +8,25 @@ import org.apache.spark.sql.functions._
   *
   * The reference computes, per point, a linear scan over K broadcast
   * centroids tracking the min distance (reference `Task1.java:36-54`).
-  * Spark-native form: a single codegen'd column expression — an array of
-  * `struct(distance, index)` candidates reduced with `array_min`, whose
-  * struct ordering (first field, then second) yields min-distance with
-  * lowest-index tie-break, exactly the reference's strict `<` semantics
-  * (reference `Task1.java:47-50`). No UDF, no shuffle; stays inside
-  * whole-stage codegen and scales linearly with input.
+  * Spark-native form: one native codegen'd expression
+  * (functions/CentroidKernels) that scans the K centroids with the
+  * reference's strict `<`, so ties go to the lowest index (reference
+  * `Task1.java:47-50`). The distance is
+  * `Math.sqrt(StrictMath.pow(dx, 2) + StrictMath.pow(dy, 2) + StrictMath.pow(dz, 2))`,
+  * the calls Spark's own `sqrt(pow(_, 2) + …)` codegen makes, which match
+  * the reference formula bit-for-bit (reference `Task1.java:42`). No UDF,
+  * no shuffle; stays inside whole-stage codegen and scales linearly with
+  * input. The centroids reach generated code as a reference object, not
+  * as literals, so every Lloyd iteration reuses one compiled class.
+  *
+  * A point with a null coordinate gets a null `cluster`.
   */
 object Assign {
 
-  /** P2: Euclidean distance from a point column triple to a fixed centroid.
-    * Uses `pow(_, 2)` (= `java.lang.Math.pow`) to match the reference
-    * formula bit-for-bit (reference `Task1.java:42`).
-    */
-  def dist(x: Column, y: Column, z: Column, c: Point): Column =
-    sqrt(pow(x - c.x, 2) + pow(y - c.y, 2) + pow(z - c.z, 2))
-
   /** P3: index of the nearest centroid (0-based), ties to lowest index. */
-  def nearestCentroid(centroids: Seq[Point], x: Column, y: Column, z: Column): Column = {
-    require(centroids.nonEmpty, "no centroids")
-    val candidates = centroids.zipWithIndex.map { case (c, i) =>
-      struct(dist(x, y, z, c).as("d"), lit(i).as("idx"))
-    }
-    array_min(array(candidates: _*)).getField("idx")
-  }
+  def nearestCentroid(centroids: Seq[Point], x: Column, y: Column, z: Column): Column =
+    CentroidKernels.nearestCentroid(
+      CentroidSet(centroids.map(c => (c.x, c.y, c.z))), x, y, z)
 
   /** Adds an integer `cluster` column to a DataFrame with x,y,z columns. */
   def assign(points: DataFrame, centroids: Seq[Point]): DataFrame =

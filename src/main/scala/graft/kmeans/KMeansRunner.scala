@@ -1,5 +1,6 @@
 package graft.kmeans
 
+import graft.functions.{CentroidKernels, CentroidSet}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -103,16 +104,13 @@ object KMeansRunner {
     require(rounds >= 1, "rounds must be >= 1")
     // Deliberately NOT persisted (unlike converge): a filter over a
     // cached relation gets its predicate pushed into InMemoryTableScan,
-    // where the growing K-term distance chain is evaluated OUTSIDE
-    // whole-stage codegen — measured 5.5 s/pass cached vs 1.3 s/pass
-    // straight off the pruned parquet scan at 600k rows x 30 centers
+    // where the distance and coin are evaluated OUTSIDE whole-stage
+    // codegen — measured (with the distance as a K-term literal `least`
+    // chain) 5.5 s/pass cached vs 1.3 s/pass straight off the pruned
+    // parquet scan at 600k rows x 30 centers
     // (the aggregate passes cost the same either way). Callers that
     // already persisted their points keep that choice — and pay it.
     locally {
-      def d2(c: Point) =
-        (col("x") - c.x) * (col("x") - c.x) +
-          (col("y") - c.y) * (col("y") - c.y) +
-          (col("z") - c.z) * (col("z") - c.z)
       val first = points.select(max(struct(col("x"), col("y"), col("z"))).as("s"))
         .collect().head
       require(!first.isNullAt(0), "scalableInit: no points")
@@ -126,7 +124,11 @@ object KMeansRunner {
       var r = 0
       var done = false
       while (r < rounds && !done) {
-        val minD2 = cents.map(d2).reduce(least(_, _))
+        // min over centers of the multiply-form d², bitwise the
+        // `least(d2(c0), d2(c1), …)` chain; the centers are bound to the
+        // native kernel, so this column compiles once, not once a round
+        val minD2 = CentroidKernels.minSqDist(
+          CentroidSet(cents.map(c => (c.x, c.y, c.z))), col("x"), col("y"), col("z"))
         // DECIMAL-grid cost: per-row d² rounds to 18 decimals and sums
         // as DECIMAL — exact, so `cost` is identical under ANY
         // partition layout or row order (a raw double sum differs in
@@ -275,13 +277,20 @@ object KMeansRunner {
     curr
   }
 
-  /** C1: one iteration — assign + re-center, collecting K rows to the driver. */
-  def step(points: DataFrame, centroids: Seq[Point]): Seq[(Int, Point)] =
-    Recenter.recenter(Assign.assign(points, centroids))
-      .collect()
+  /** C1: one iteration — assign + re-center, collecting K rows to the driver.
+    * A point with a null coordinate gets a null cluster, which comes back
+    * as its own group; that fails here instead of skewing a centroid. */
+  def step(points: DataFrame, centroids: Seq[Point]): Seq[(Int, Point)] = {
+    val rows = Recenter.recenter(Assign.assign(points, centroids)).collect()
+    if (rows.exists(_.isNullAt(0)))
+      throw new IllegalArgumentException(
+        "KMeansRunner.step: input has points with a null coordinate; " +
+          "filter them out first (Points.readCsv does)")
+    rows
       .map(r => r.getInt(0) -> Point(r.getDouble(1), r.getDouble(2), r.getDouble(3)))
       .sortBy(_._1)
       .toSeq
+  }
 
   /** A7: Σ_k dist(prev_k, curr_k), paired positionally like the reference's
     * file-order pairing (reference `Task3.java:116-128`). A size mismatch

@@ -41,7 +41,7 @@ object Points {
     * unparseable lines; the explicit null filter additionally drops lines
     * with *empty* fields (e.g. `1,2,`), which the file source leaves as
     * nulls because it forces a nullable schema — a null would otherwise
-    * silently reach Assign (null distance sorts first) and Recenter.
+    * reach Assign, get a null cluster and fail `KMeansRunner.step`.
     */
   def readCsv(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.functions.col

@@ -11,19 +11,22 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Optimizer rule: `pow(x, 2)` becomes `x * x` for deterministic x.
   *
-  * Two wins over the built-in lowering to Math.pow:
-  *   - throughput: Math.pow is a ~50-cycle libm call per row where the
-  *     multiply is one instruction inside whole-stage codegen;
+  * Two wins over the built-in lowering to StrictMath.pow:
+  *   - throughput: StrictMath.pow is a ~50-cycle libm call per row where
+  *     the multiply is one instruction inside whole-stage codegen;
   *   - cross-engine float discipline (see contract/PointSpace): libm pow
   *     is only 1-ulp-accurate, so `pow(x,2)` can differ from DuckDB's
   *     `x*x` in the last bit; the rewrite makes squares bit-identical
   *     across engines by construction.
   *
   * Deliberately opt-in (via GraftExtensions / experimental methods, NOT
-  * always-on) because the reference-parity paths (`kmeans/Assign.dist`)
-  * pin Math.pow bit behavior for golden-file reproduction — enabling
-  * the rule changes those last-bit floats, which is exactly what the
-  * contract queries want and exactly what golden parity doesn't.
+  * always-on): it changes the last-bit floats of any `pow(x, 2)` a user
+  * query writes, which is exactly what the contract queries want and not
+  * what every caller expects. The reference-parity path is out of its
+  * reach either way: the K-Means assign kernel
+  * (`functions/CentroidKernels.NearestCentroid`) calls StrictMath.pow
+  * inside one native expression, which has no `Pow` node to rewrite, so
+  * golden-file reproduction holds with or without the rule.
   *
   * Duplicating `x` is safe: codegen's subexpression elimination computes
   * a deterministic x once; non-deterministic x is never rewritten (the

@@ -8,6 +8,21 @@ import org.scalatest.matchers.should.Matchers
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val ref: String = "/root/reference"
+
+  /** Path of `rel` under the reference checkout, the only way specs read
+    * it. Fails the calling test with "reference fixture absent: <path>"
+    * when the file is missing, instead of a Spark path error deep in a
+    * plan; there is no fallback data. */
+  def refFile(rel: String): String = {
+    val path = s"$ref/$rel"
+    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path)))
+      fail(s"reference fixture absent: $path")
+    path
+  }
+
+  /** Filesystem path of a test resource under `src/test/resources`. */
+  def fixture(rel: String): String =
+    java.nio.file.Paths.get(getClass.getResource(s"/$rel").toURI).toString
 }
 
 object SparkSpec {

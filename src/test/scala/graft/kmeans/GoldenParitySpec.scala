@@ -18,10 +18,10 @@ import org.apache.spark.sql.DataFrame
 class GoldenParitySpec extends SparkSpec {
 
   private lazy val points: DataFrame =
-    Points.readCsv(spark, s"$ref/3d_points_dataset.csv").coalesce(1).cache()
+    Points.readCsv(spark, refFile("3d_points_dataset.csv")).coalesce(1).cache()
   private lazy val rawPoints: DataFrame =
-    Points.readCsvWithRaw(spark, s"$ref/3d_points_dataset.csv").coalesce(1).cache()
-  private lazy val seeds: Seq[Point] = Points.readSeeds(s"$ref/seed_points_K5.csv")
+    Points.readCsvWithRaw(spark, refFile("3d_points_dataset.csv")).coalesce(1).cache()
+  private lazy val seeds: Seq[Point] = Points.readSeeds(refFile("seed_points_K5.csv"))
 
   private def goldenLines(path: String): Seq[String] = {
     val src = scala.io.Source.fromFile(path)
@@ -30,7 +30,7 @@ class GoldenParitySpec extends SparkSpec {
 
   test("task1: one iteration reproduces the golden byte-exactly") {
     val centers = KMeansRunner.step(points, seeds)
-    Sinks.centroidLines(centers) shouldBe goldenLines(s"$ref/output/task1/part-r-00000")
+    Sinks.centroidLines(centers) shouldBe goldenLines(refFile("output/task1/part-r-00000"))
   }
 
   test("task2: all 5 fixed iterations reproduce the goldens byte-exactly") {
@@ -39,7 +39,7 @@ class GoldenParitySpec extends SparkSpec {
     for (i <- 0 until 5) {
       withClue(s"iteration_$i: ") {
         Sinks.centroidLines(r.history(i)) shouldBe
-          goldenLines(s"$ref/output/task2/iteration_$i/part-r-00000")
+          goldenLines(refFile(s"output/task2/iteration_$i/part-r-00000"))
       }
     }
   }
@@ -51,7 +51,7 @@ class GoldenParitySpec extends SparkSpec {
     for (i <- 0 until 28) {
       withClue(s"iteration_$i: ") {
         Sinks.centroidLines(r.history(i)) shouldBe
-          goldenLines(s"$ref/output/task3/iteration_$i/part-r-00000")
+          goldenLines(refFile(s"output/task3/iteration_$i/part-r-00000"))
       }
     }
   }
@@ -59,9 +59,9 @@ class GoldenParitySpec extends SparkSpec {
   test("task4/5a/5b goldens are identical to task3 (combiner equivalence holds)") {
     // the reference's combiner variants committed byte-identical outputs;
     // our (sum,count) partial aggregation reproduces task3, hence all four.
-    val golden3 = goldenLines(s"$ref/output/task3/iteration_27/part-r-00000")
+    val golden3 = goldenLines(refFile("output/task3/iteration_27/part-r-00000"))
     for (t <- Seq("task4", "task5a", "task5b")) {
-      goldenLines(s"$ref/output/$t/iteration_27/part-r-00000") shouldBe golden3
+      goldenLines(refFile(s"output/$t/iteration_27/part-r-00000")) shouldBe golden3
     }
   }
 
@@ -77,7 +77,7 @@ class GoldenParitySpec extends SparkSpec {
   test("Silhouette1: per-cluster metrics match the golden within 1e-9 relative") {
     val assigned = Assign.assign(points, seeds)
     val ours = Silhouette.collectMetrics(assigned, guards = false)
-    val golden = goldenLines(s"$ref/output/Silhouette1/part-r-00000").map(parseMetricLine)
+    val golden = goldenLines(refFile("output/Silhouette1/part-r-00000")).map(parseMetricLine)
     ours.map(_._1) shouldBe golden.map(_._1)
     for (((id, a1, a2, a3), (_, g1, g2, g3)) <- ours.zip(golden)) {
       withClue(s"cluster $id: ") {
@@ -106,7 +106,7 @@ class GoldenParitySpec extends SparkSpec {
       val assigned = Assign.assign(rawPoints, prev)
       val ours = Sinks.clusteredDataLines(assigned).collect()
         .map(r => parseClusteredLine(s"${r.getInt(0)}\t${r.getString(1)}")).toSeq
-      val golden = goldenLines(s"$ref/output/Silhouette2/iteration_$i/part-r-00000")
+      val golden = goldenLines(refFile(s"output/Silhouette2/iteration_$i/part-r-00000"))
         .map(parseClusteredLine)
       withClue(s"iteration_$i: ") { ours shouldBe golden }
       if (i < 4) prev = KMeansRunner.step(points, prev).map(_._2)
@@ -121,7 +121,7 @@ class GoldenParitySpec extends SparkSpec {
       val assigned = Assign.assign(rawPoints, seedsI)
       val ours = Sinks.clusteredDataLines(assigned).collect()
         .map(r2 => parseClusteredLine(s"${r2.getInt(0)}\t${r2.getString(1)}")).toSeq
-      val golden = goldenLines(s"$ref/output/Silhouette3/iteration_$i/part-r-00000")
+      val golden = goldenLines(refFile(s"output/Silhouette3/iteration_$i/part-r-00000"))
         .map(parseClusteredLine)
       withClue(s"iteration_$i: ") { ours shouldBe golden }
     }

@@ -21,6 +21,54 @@ class KMeansCoreSpec extends SparkSpec {
     out shouldBe Map(1.0 -> 0, 7.0 -> 1, 4.0 -> 0)
   }
 
+  test("a point with a null coordinate gets a null cluster, not cluster 0") {
+    val pts = Seq[(Option[Double], Option[Double], Option[Double])](
+      (Some(7.0), Some(0.0), Some(0.0)), (None, Some(0.0), Some(0.0)),
+      (Some(1.0), Some(0.0), None)).toDF("x", "y", "z")
+    val out = Assign.assign(pts, seeds).select("cluster").collect().map(r => Option(r.get(0)))
+    out.toSeq shouldBe Seq(Some(1), None, None)
+  }
+
+  test("step fails loudly on null-coordinate points instead of skewing a centroid") {
+    val pts = Seq[(Option[Double], Option[Double], Option[Double])](
+      (Some(1.0), Some(0.0), Some(0.0)), (Some(7.0), Some(0.0), Some(0.0)),
+      (Some(2.0), None, Some(0.0))).toDF("x", "y", "z")
+    val e = intercept[IllegalArgumentException](KMeansRunner.step(pts, seeds))
+    e.getMessage should include("null coordinate")
+  }
+
+  test("Lloyd iterations after the first compile no code (centroids are not literals)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions.col
+    val rng = new scala.util.Random(42)
+    // 4 blobs of 500 integer points; each call draws a new data set
+    def blobs() = {
+      val cs = Seq.fill(4)((rng.nextInt(1000).toDouble, rng.nextInt(1000).toDouble,
+        rng.nextInt(1000).toDouble))
+      val rows = for (i <- 0 until 2000) yield {
+        val (cx, cy, cz) = cs(i % 4)
+        (cx + rng.nextInt(60), cy + rng.nextInt(60), cz + rng.nextInt(60))
+      }
+      val df = rows.toDF("x", "y", "z").repartition(4).persist()
+      df.count()
+      df
+    }
+    def firstK(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("x"), col("y"), col("z")).as[(Double, Double, Double)].head(4)
+        .map { case (x, y, z) => Point(x, y, z) }.toSeq
+    val warm = blobs()
+    KMeansRunner.fixedIterations(warm, firstK(warm), 3)
+    warm.unpersist()
+    val pts = blobs()
+    var compiles = Vector.empty[Long]
+    val r = KMeansRunner.fixedIterations(pts, firstK(pts), 5, (_, _, _) =>
+      compiles :+= CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+    pts.unpersist()
+    r.iterations shouldBe 5
+    // iterations 2..5: new centroids every time, the same generated code
+    (compiles.last - compiles.head) shouldBe 0L
+  }
+
   test("recenter computes per-cluster means; empty clusters vanish") {
     val pts = Seq(
       (0.0, 0.0, 2.0), (2.0, 4.0, 6.0), // cluster 0 -> mean (1, 2, 4)
@@ -101,8 +149,8 @@ class KMeansCoreSpec extends SparkSpec {
     KMeansRunner.farthestPointInit(pts, 5) shouldBe Seq(Point(2, 2, 2), Point(1, 1, 1))
   }
 
-  test("farthestPointInit seeds a converging run on the reference data") {
-    val pts = Points.readCsv(spark, s"$ref/3d_points_dataset.csv").cache()
+  test("farthestPointInit seeds a converging run on the K-Means fixture") {
+    val pts = Points.readCsv(spark, fixture("kmeans/points.csv")).cache()
     val seeds = KMeansRunner.farthestPointInit(pts, 5)
     seeds.toSet should have size 5
     val r = KMeansRunner.converge(pts, seeds, maxIter = 30, threshold = 5.0)

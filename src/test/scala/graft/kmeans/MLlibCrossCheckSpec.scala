@@ -5,11 +5,15 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.feature.VectorAssembler
 
 /** Sanity cross-check against MLlib (SURVEY §7 extension): our converged
-  * clustering on the reference dataset should be at least as good as
-  * MLlib's KMeans at the same K, measured by within-cluster SSE. Not a
-  * parity test — MLlib uses different init/stopping — just a guard that
-  * the engine's clustering quality is in the library's league. */
+  * clustering on the in-repo K-Means fixture (5,000 points, K = 5 seeds;
+  * see FIXTURES.md) should be at least as good as MLlib's KMeans at the
+  * same K, measured by within-cluster SSE. Not a parity test — MLlib uses
+  * different init/stopping — just a guard that the engine's clustering
+  * quality is in the library's league. */
 class MLlibCrossCheckSpec extends SparkSpec {
+
+  private lazy val pts = Points.readCsv(spark, fixture("kmeans/points.csv")).cache()
+  private lazy val seeds = Points.readSeeds(fixture("kmeans/seeds_k5.csv"))
 
   private def sse(pts: org.apache.spark.sql.DataFrame, centers: Seq[Point]): Double = {
     import org.apache.spark.sql.functions._
@@ -34,9 +38,7 @@ class MLlibCrossCheckSpec extends SparkSpec {
       .fit(features).summary.trainingCost
   }
 
-  test("converged SSE is within 10% of MLlib KMeans on the reference data") {
-    val pts = Points.readCsv(spark, s"$ref/3d_points_dataset.csv").cache()
-    val seeds = Points.readSeeds(s"$ref/seed_points_K5.csv")
+  test("converged SSE is within 10% of MLlib KMeans on the K-Means fixture") {
     val r = KMeansRunner.converge(pts, seeds, maxIter = 30, threshold = 5.0)
     val ours = sse(pts, r.centers.map(_._2))
     val theirs = mllibSse(pts)
@@ -53,13 +55,12 @@ class MLlibCrossCheckSpec extends SparkSpec {
     * array preserves seed order — center i stays cluster i, matching our
     * seed-index cluster ids. Not a contract query: an iterative
     * fixed-point comparison isn't SQL-expressible (documented in
-    * COVERAGE.md); this spec is the check. */
+    * COVERAGE.md); this spec is the check. MLlib assigns with its own
+    * distance code, so it is also an independent check of the native
+    * nearest-centroid kernel. */
   test("same seeds + tol=0: MLlib lands on the converge-loop fixed point") {
     import org.apache.spark.mllib.clustering.{KMeans => RddKMeans, KMeansModel}
     import org.apache.spark.mllib.linalg.Vectors
-
-    val pts = Points.readCsv(spark, s"$ref/3d_points_dataset.csv").cache()
-    val seeds = Points.readSeeds(s"$ref/seed_points_K5.csv")
 
     // threshold 0.0 can never satisfy d < 0, so the loop runs until the
     // assignment partition stabilizes — at which point recomputed means
@@ -95,9 +96,8 @@ class MLlibCrossCheckSpec extends SparkSpec {
     * (`scalableInit`, MLlib's own init strategy with the repo's
     * content-hash coin) converged through our loop should land in the
     * same quality league as MLlib's randomized k-means|| — SSE within
-    * 10% — on the reference data. */
+    * 10% — on the K-Means fixture. */
   test("scalableInit seeds converge within 10% of MLlib's k-means|| SSE") {
-    val pts = Points.readCsv(spark, s"$ref/3d_points_dataset.csv").cache()
     val seeds = KMeansRunner.scalableInit(pts, k = 5)
     seeds should have size 5
     val r = KMeansRunner.converge(pts, seeds, maxIter = 30, threshold = 5.0)

@@ -48,7 +48,7 @@ class PointsSpec extends SparkSpec {
   }
 
   test("readSeeds loads the reference K=5 seed file") {
-    val seeds = Points.readSeeds(s"$ref/seed_points_K5.csv")
+    val seeds = Points.readSeeds(refFile("seed_points_K5.csv"))
     seeds should have size 5
     seeds.head shouldBe Point(8296, 403, 670)
   }

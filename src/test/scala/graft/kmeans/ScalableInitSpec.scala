@@ -58,6 +58,35 @@ class ScalableInitSpec extends SparkSpec {
     s1 should be <= s2 * 1.05
   }
 
+  test("seeds are exactly those of the least(...) column chain it replaced") {
+    // recorded from the implementation that built minD2 as
+    // least(d2(c0), d2(c1), ...) over literal centers; the native
+    // min-squared-distance kernel must reproduce every bit, order included
+    KMeansRunner.scalableInit(cloud, k = 4) shouldBe Seq(
+      Point(2.0800000000000005, 0.9099999999999998, 100.66),
+      Point(1.44, 100.89250000000001, 0.2675),
+      Point(101.6, 1.2249999999999999, 0.2575),
+      Point(1.64, 1.1549999999999998, 0.36))
+    KMeansRunner.scalableInit(cloud, k = 3, rounds = 3, oversample = 1.5) shouldBe Seq(
+      Point(2.3600000000000003, 50.927499999999995, 0.19),
+      Point(1.6, 0.7, 100.93),
+      Point(102.08, 2.0999999999999996, 0.27999999999999997))
+    KMeansRunner.scalableInit(cloud, k = 6, rounds = 5, oversample = 4.0) shouldBe Seq(
+      Point(0.3368421052631579, 100.77368421052631, 0.2568421052631579),
+      Point(1.6200000000000003, 1.1199999999999999, 100.43499999999999),
+      Point(101.47999999999999, 1.0849999999999995, 0.48249999999999993),
+      Point(1.6400000000000001, 1.1199999999999999, 0.45),
+      Point(2.9142857142857146, 101.2, 0.02),
+      Point(1.6, 102.1, 0.92))
+    val fx = Points.readCsv(spark, fixture("kmeans/points.csv"))
+    KMeansRunner.scalableInit(fx, k = 5) shouldBe Seq(
+      Point(8976.18018018018, 312.67667667667666, 572.2702702702703),
+      Point(864.2630541871921, 645.543842364532, 545.3438423645321),
+      Point(4871.453465346534, 542.1178217821782, 575.6623762376238),
+      Point(3066.5513733468974, 623.3458799593083, 438.72838250254324),
+      Point(6813.563947633434, 422.24974823766365, 672.1641490433032))
+  }
+
   test("sub-grid magnitudes: tiny-coordinate corpora still seed fully") {
     // every d² here is < 5e-19 — below the decimal cost grid's
     // resolution. The done-check must use the exact max, and the
