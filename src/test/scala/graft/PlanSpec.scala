@@ -32,6 +32,13 @@ class PlanSpec extends SparkSpec {
     (p should not).include("CartesianProduct")
   }
 
+  test("sil_lineitem: the pair space never becomes rows — one distance-sum projection, no pair join") {
+    val p = plan("sil_lineitem")
+    p should include("graft_pair_dist_sums(")
+    (p should not).include("BroadcastNestedLoopJoin")
+    (p should not).include("SortMergeJoin")
+  }
+
   test("ann_topk: query-id IN filter pushed to the embeddings scan") {
     val p = plan("ann_topk")
     p should include("In(vec_id, [0,1,2])")

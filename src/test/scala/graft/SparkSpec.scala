@@ -20,6 +20,20 @@ trait SparkSpec extends AnyFunSuite with Matchers {
     path
   }
 
+  /** Runs `body` with whole-stage codegen off and expressions evaluated
+    * interpreted (`NO_CODEGEN`), restoring the session's settings after. */
+  def interpreted[T](body: => T): T = {
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Filesystem path of a test resource under `src/test/resources`. */
   def fixture(rel: String): String =
     java.nio.file.Paths.get(getClass.getResource(s"/$rel").toURI).toString

@@ -50,18 +50,6 @@ class CentroidKernelsSpec extends SparkSpec {
         java.lang.Double.doubleToLongBits(r.getDouble(3))))
   }
 
-  private def interpreted[T](body: => T): T = {
-    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Both evaluation paths agree with the old expressions, and with each other. */
   private def check(pts: Seq[C], cs: Seq[C]): Seq[(Int, Int, Long, Long)] = {
     val generated = evaluate(pts, cs)
